@@ -3,10 +3,13 @@ package graft.ml
 import org.apache.spark.rdd.RDD
 
 /** Preprocessor catalog mirroring the reference (PipelineMap.scala:67):
-  * PolynomialFeatures, StandardScaler, MinMaxScaler. Stats are gathered with
-  * one distributed `treeAggregate` pass (map-side combine, log-depth merge —
-  * no driver bottleneck at scale); transforms are pure per-row functions
-  * applied inside the training `mapPartitions`.
+  * PolynomialFeatures, StandardScaler, MinMaxScaler. Each scaler's stats are
+  * gathered with one distributed `treeAggregate` pass over the input rows
+  * (map-side combine, log-depth merge — no driver bottleneck at scale);
+  * PolynomialFeatures needs no pass. Transforms are pure per-row functions:
+  * `Trainer.fit` applies the fitted chain once per row, in the `map` whose
+  * output it persists for the round passes, and `FittedPipeline.predict`
+  * applies it inside its prediction UDF.
   */
 sealed trait FittedPreprocessor extends Serializable {
   def transform(x: Array[Double]): Array[Double]

@@ -85,8 +85,25 @@ final class FittedPipeline(
   * Train/test split reproduces FlinkSpoke.scala:92-107: of every 10 points
   * 2 go to a <=`testCap`-slot ring buffer per partition; ring evictions are
   * fed back to training.
+  *
+  * Passes over the data: a fit with R rounds makes one statistics pass per
+  * stats-based preprocessor ([[graft.ml.Preprocess.fitChain]], over the input
+  * rows), R round passes and one final evaluation. The fitted chain is
+  * applied once per row, in the `map` whose output is persisted; round 1
+  * fills that persist. Like the reference's spokes, a round pass scores the
+  * held-out ring it has just rebuilt against the freshest global, so round
+  * r's pass yields the curve point of round r-1; only the final evaluation
+  * reads the data just to score.
   */
 object Trainer {
+
+  /** Per-partition held-out sums: loss, score term (hits for classifiers,
+    * squared error otherwise) and ring points scored.
+    */
+  private final case class Held(lossSum: Double, scoreSum: Double, k: Long) {
+    def +(o: Held): Held = Held(lossSum + o.lossSum, scoreSum + o.scoreSum, k + o.k)
+  }
+  private val NoHeld = Held(0.0, 0.0, 0L)
 
   /** `init`: optional shared starting global model — round-1 replicas seed
     * from it instead of `learner.init`. Required for MiniBatchKMeans
@@ -117,10 +134,11 @@ object Trainer {
         "(Trainer.fit init param) — see MiniBatchKMeans.sharedSeed")
     tdata.persist(StorageLevel.MEMORY_AND_DISK)
     try {
-      val dim = tdata.first()._1.length
       val testCap = spec.testCap
       val stats = ProtocolStats()
       var global: Option[ModelState] = init
+      var anyMerged = false
+      var mergedLast = false // the previous round produced a new global
       var totalFitted = 0L
       var totalCumLoss = 0.0
       val curve = mutable.ArrayBuffer[Double]()
@@ -169,6 +187,9 @@ object Trainer {
         val bcSeeds = sc.broadcast(recent.toIndexedSeq)
         val sBound = sspS.getOrElse(0)
         val freshRound = r - 1 // round of the freshest global in the window
+        // the freshest global is the one round r-1 merged: score it on the
+        // rings this pass rebuilds (never the replica being trained)
+        val scorePrev = mergedLast
         val replRdd = tdata.mapPartitions { it =>
           val pid = org.apache.spark.TaskContext.getPartitionId()
           val lag =
@@ -179,25 +200,27 @@ object Trainer {
               val want = if (sBound >= numParts - 1) pid else pid % (sBound + 1)
               math.min(want, bcSeeds.value.length - 1)
             }
-          val m = bcSeeds.value(lag).map(_.deepCopy).getOrElse(learner.init(dim))
-          m.seedRound = (freshRound - lag).toLong
-          m.n = 0L; m.cumLoss = 0.0 // per-round counters; totals tracked outside
-          val ring = new Array[(Array[Double], Double)](testCap)
-          var ringSize = 0; var ringPos = 0; var cnt = 0L
-          it.foreach { case (x, y) =>
-            if (cnt % 10 >= 8) {
-              if (ringSize < testCap) { ring(ringSize) = (x, y); ringSize += 1 }
-              else {
-                val ev = ring(ringPos); ring(ringPos) = (x, y)
-                ringPos = (ringPos + 1) % testCap
-                learner.fit(m, ev._1, ev._2)
-              }
-            } else learner.fit(m, x, y)
-            cnt += 1
+          var m: ModelState = null
+          val ring = holdOut(it, testCap) { case (x, y) =>
+            if (m == null) {
+              m = bcSeeds.value(lag).map(_.deepCopy)
+                .getOrElse(learner.init(x.length)) // dim from data
+              m.seedRound = (freshRound - lag).toLong
+              m.n = 0L; m.cumLoss = 0.0 // per-round counters; totals tracked outside
+            }
+            learner.fit(m, x, y)
           }
-          learner.finish(m)
-          if (cnt == 0) Iterator.empty else Iterator.single(m)
+          if (m == null) Iterator.empty
+          else {
+            learner.finish(m)
+            val held =
+              if (scorePrev) scoreRing(learner, bcSeeds.value.head.get, ring)
+              else NoHeld
+            Iterator.single((m, held))
+          }
         }
+        // per-partition held-out sums of round r-1's global, partition order
+        var held: Seq[Held] = Nil
         val mergedOpt: Option[ModelState] = if (fgmProto.isDefined &&
             global.isDefined) {
           // FGM two-level rounds (see Protocols.FGM): frozen rounds move
@@ -211,17 +234,18 @@ object Trainer {
           try {
             // counter phase: one drift norm per worker, partition order
             val drifts = repl
-              .map(m => Protocols.driftNorm(m.params,
-                bcSeeds.value.head.get.params))
+              .map { case (m, h) => (Protocols.driftNorm(m.params,
+                bcSeeds.value.head.get.params), h) }
               .collect()
+            held = drifts.map(_._2).toSeq
             if (drifts.isEmpty) None
-            else if (!fgm.decide(drifts.toSeq, stats))
+            else if (!fgm.decide(drifts.map(_._1).toSeq, stats))
               Some(fgm.frozen(global.get))
             else {
               val maxP = spec.maxMsgParams
               val blocks = repl.mapPartitions { it =>
                 val pid = org.apache.spark.TaskContext.getPartitionId()
-                it.flatMap(m => ModelWire.chunk(m, maxP, pid).iterator)
+                it.flatMap { case (m, _) => ModelWire.chunk(m, maxP, pid).iterator }
               }.collect().toSeq
               val shipped = ModelWire.reassemble(blocks,
                 (bdim, ps) => learner.init(bdim).loadWire(ps))
@@ -230,13 +254,20 @@ object Trainer {
             }
           } finally repl.unpersist(blocking = false)
         } else if (useTreeMerge) {
-            if (replRdd.isEmpty()) None
-            else {
-              val (m, k, bytes) = replRdd
-                .map(r => (r, 1L, r.params.length.toLong * 8L))
-                .treeReduce { case ((ma, ka, ba), (mb, kb, bb)) =>
-                  (learner.merge(Seq(ma, mb)), ka + kb, ba + bb)
-                }
+            // one action: an empty input folds to the None zero
+            def mergeOpt(a: Option[ModelState], b: Option[ModelState]) =
+              if (a.isDefined && b.isDefined) Some(learner.merge(Seq(a.get, b.get)))
+              else a.orElse(b)
+            val (mOpt, k, bytes, h) = replRdd.treeAggregate(
+              (Option.empty[ModelState], 0L, 0L, NoHeld))(
+              { case ((ma, ka, ba, ha), (m, hm)) =>
+                (mergeOpt(ma, Some(m)), ka + 1L, ba + m.params.length.toLong * 8L, ha + hm)
+              },
+              { case ((ma, ka, ba, ha), (mb, kb, bb, hb)) =>
+                (mergeOpt(ma, mb), ka + kb, ba + bb, ha + hb)
+              })
+            held = Seq(h)
+            mOpt.map { m =>
               stats.modelsShipped += k
               stats.bytesShipped += bytes
               // each replica enters the merge tree once, as
@@ -244,7 +275,7 @@ object Trainer {
               stats.blocks +=
                 k * ((m.wireParams.length.toLong + spec.maxMsgParams - 1) /
                   spec.maxMsgParams).max(1L)
-              Some(m)
+              m
             }
           } else {
             // Chunked ship path: the map-side gate drops non-drifted
@@ -252,89 +283,126 @@ object Trainer {
             // marker instead of O(params) per skipped replica); shipped
             // replicas are split into <=maxMsgParams-double blocks so no
             // single collected record exceeds the message cap, then
-            // reassembled before the protocol merge.
+            // reassembled before the protocol merge. Each partition's
+            // held-out sums travel as one record ahead of its blocks.
             val maxP = spec.maxMsgParams
             val collected = replRdd.mapPartitions { it =>
               val pid = org.apache.spark.TaskContext.getPartitionId()
-              it.flatMap { m =>
-                if (protocol.ships(m, bcSeeds.value.head))
-                  ModelWire.chunk(m, maxP, pid).iterator.map(Option(_))
-                else Iterator.single(Option.empty[ParamBlock])
+              it.flatMap { case (m, h) =>
+                val ship =
+                  if (protocol.ships(m, bcSeeds.value.head))
+                    ModelWire.chunk(m, maxP, pid).iterator.map(Option(_))
+                  else Iterator.single(Option.empty[ParamBlock])
+                Iterator.single[Either[Held, Option[ParamBlock]]](Left(h)) ++
+                  ship.map(Right(_))
               }
             }.collect()
-            val blocks = collected.flatten.toSeq
+            held = collected.collect { case Left(h) => h }.toSeq
+            val gated = collected.collect { case Right(b) => b }
+            val blocks = gated.flatten.toSeq
             val shipped = ModelWire.reassemble(blocks,
               (bdim, ps) => learner.init(bdim).loadWire(ps))
             stats.blocks += blocks.length
             val totalReplicas =
-              collected.count(_.isEmpty).toLong + blocks.count(_.idx == 0)
+              gated.count(_.isEmpty).toLong + blocks.count(_.idx == 0)
             if (collected.isEmpty) None
             else Some(protocol.aggregate(shipped, global, learner, stats,
               totalReplicas = totalReplicas))
           }
+        if (scorePrev) curve += summarize(learner, held.foldLeft(NoHeld)(_ + _))._1
         mergedOpt.foreach { merged =>
           totalFitted += merged.n
           totalCumLoss += merged.cumLoss
           merged.n = totalFitted
           merged.cumLoss = totalCumLoss
           global = Some(merged)
-          curve += evaluate(sc, tdata, learner, global.get, testCap)._1
         }
+        mergedLast = mergedOpt.isDefined
+        anyMerged ||= mergedLast
         // advance the stale-read window even on a no-merge round, so
         // recent(k) stays aligned with "global after round r-k"
         recent.prepend(global)
         while (recent.length > histCap) recent.removeLast()
       }
-      val model = global.getOrElse(learner.init(dim))
+      val model =
+        if (anyMerged) global.get
+        else {
+          // no round merged (no rows, or no rounds): an empty input fails here
+          val dim = tdata.first()._1.length
+          global.getOrElse(learner.init(dim))
+        }
       val (testLoss, score) = evaluate(sc, tdata, learner, model, testCap)
+      if (mergedLast) curve += testLoss
       new FittedPipeline(spec, chain, model, learner, protocol.name, stats,
         curve.toSeq, testLoss, score)
     } finally tdata.unpersist(blocking = false)
   }
 
-  /** Replay the deterministic split and evaluate the model on the held-out
-    * ring contents: (avg test loss, score). Score = accuracy for
+  /** One partition's pass through the deterministic split: of every 10
+    * points the last 2 enter the held-out ring; the rest, and every point a
+    * full ring evicts, go to `train` in arrival order. Returns the ring's
+    * final contents in slot order — the same for every pass over the same
+    * partition.
+    */
+  private def holdOut(it: Iterator[(Array[Double], Double)], testCap: Int)(
+      train: ((Array[Double], Double)) => Unit): Array[(Array[Double], Double)] = {
+    val ring = new Array[(Array[Double], Double)](testCap)
+    var ringSize = 0; var ringPos = 0; var cnt = 0L
+    it.foreach { p =>
+      if (cnt % 10 >= 8) {
+        if (ringSize < testCap) { ring(ringSize) = p; ringSize += 1 }
+        else {
+          val ev = ring(ringPos); ring(ringPos) = p
+          ringPos = (ringPos + 1) % testCap
+          train(ev)
+        }
+      } else train(p)
+      cnt += 1
+    }
+    if (ringSize == testCap) ring else java.util.Arrays.copyOf(ring, ringSize)
+  }
+
+  /** Held-out sums of `m` over one ring, in slot order. */
+  private def scoreRing(learner: OnlineLearner, m: ModelState,
+      ring: Array[(Array[Double], Double)]): Held = {
+    var ls = 0.0; var sc = 0.0
+    var i = 0
+    while (i < ring.length) {
+      val (x, y) = ring(i)
+      ls += learner.loss(m, x, y)
+      if (learner.isClassifier) { if (learner.predict(m, x) == y) sc += 1.0 }
+      else { val e = learner.predict(m, x) - y; sc += e * e }
+      i += 1
+    }
+    Held(ls, sc, ring.length.toLong)
+  }
+
+  /** (avg test loss, score) from summed held-out sums. Score = accuracy for
     * classifiers, -RMSE for regressors, -mean distortion for clustering.
+    */
+  private def summarize(learner: OnlineLearner, h: Held): (Double, Double) =
+    if (h.k == 0) (0.0, 0.0)
+    else {
+      val avgLoss = h.lossSum / h.k
+      val score =
+        if (learner.isClassifier) h.scoreSum / h.k
+        else if (learner.isInstanceOf[OnlineKMeans]) -avgLoss
+        else -math.sqrt(h.scoreSum / h.k)
+      (avgLoss, score)
+    }
+
+  /** Replay the deterministic split and evaluate the model on the held-out
+    * ring contents: (avg test loss, score).
     */
   private def evaluate(sc: org.apache.spark.SparkContext,
       tdata: RDD[(Array[Double], Double)], learner: OnlineLearner,
       model: ModelState, testCap: Int): (Double, Double) = {
     val bcModel = sc.broadcast(model)
-    val (lossSum, scoreSum, n) = tdata.mapPartitions { it =>
-      val ring = new Array[(Array[Double], Double)](testCap)
-      var ringSize = 0; var ringPos = 0; var cnt = 0L
-      it.foreach { case (x, y) =>
-        if (cnt % 10 >= 8) {
-          if (ringSize < testCap) { ring(ringSize) = (x, y); ringSize += 1 }
-          else { ring(ringPos) = (x, y); ringPos = (ringPos + 1) % testCap }
-        }
-        cnt += 1
-      }
-      val m = bcModel.value
-      var ls = 0.0; var sc2 = 0.0; var k = 0L
-      var i = 0
-      while (i < ringSize) {
-        val (x, y) = ring(i)
-        ls += learner.loss(m, x, y)
-        if (learner.isClassifier) { if (learner.predict(m, x) == y) sc2 += 1.0 }
-        else { val e = learner.predict(m, x) - y; sc2 += e * e }
-        k += 1
-        i += 1
-      }
-      Iterator.single((ls, sc2, k))
-    }.reduce((a, b) => (a._1 + b._1, a._2 + b._2, a._3 + b._3))
-    if (n == 0) (0.0, 0.0)
-    else {
-      val avgLoss = lossSum / n
-      val score =
-        if (learner.isClassifier) scoreSum / n
-        else if (learner.isInstanceOf[OnlineKMeans]) -avgLossSafe(lossSum, n)
-        else -math.sqrt(scoreSum / n)
-      (avgLoss, score)
-    }
+    val total = tdata.mapPartitions { it =>
+      Iterator.single(scoreRing(learner, bcModel.value, holdOut(it, testCap)(_ => ())))
+    }.reduce(_ + _)
+    summarize(learner, total)
   }
-
-  private def avgLossSafe(s: Double, n: Long): Double = if (n == 0) 0.0 else s / n
 }
 
 /** The reference's PipelineMap (PipelineMap.scala:14-71): a validated

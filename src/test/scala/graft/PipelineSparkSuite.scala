@@ -3,6 +3,7 @@ package graft
 import graft.core._
 import graft.ml._
 import graft.pipeline._
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -33,6 +34,90 @@ class PipelineSparkSuite extends AnyFunSuite {
       val x = Array.fill(dim)(next() * 2)
       (x, if (La.dot(wStar, x) >= 0) 1.0 else -1.0)
     }
+  }
+
+  /** Runs `body` and counts the Spark jobs it submits from this thread
+    * (tagged by a job group, so other threads' jobs are not counted).
+    */
+  private def jobsOf[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val group = s"count-${java.util.UUID.randomUUID()}"
+    val sentinel = s"$group-end"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => jobs.incrementAndGet()
+          case Some(`sentinel`) => drained.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted")
+      val out = try body finally sc.clearJobGroup()
+      // the listener bus delivers events in order: once the sentinel job's
+      // start arrives, every job `body` submitted has been counted
+      sc.setJobGroup(sentinel, "sentinel")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "listener bus did not drain")
+      (out, jobs.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("Trainer.fit runs R+2 jobs: stats pass, R round passes, one evaluation") {
+    val data = spark.sparkContext.parallelize(synthetic(4000, 6, 113L), 4)
+    val rounds = 3
+    val (fitted, jobs) = jobsOf(Trainer.fit(spark,
+      PipelineSpec(1, "PA", Map("C" -> 0.05), Seq("StandardScaler"), "Synchronous",
+        rounds = rounds), data))
+    assert(jobs == rounds + 2, s"$jobs jobs for a $rounds-round fit")
+    assert(fitted.curve.length == rounds)
+    assert(fitted.score > 0.9, s"score ${fitted.score}")
+  }
+
+  test("curve points scored inside the round pass equal standalone evaluation") {
+    val data = spark.sparkContext.parallelize(synthetic(6000, 5, 211L), 4)
+    val K = 4
+    def close(a: Double, b: Double) =
+      math.abs(a - b) <= 1e-12 * math.max(math.abs(a), math.abs(b))
+    val cases = Seq(
+      "Synchronous" -> PipelineSpec(61, "PA", Map("C" -> 0.01), Nil, "Synchronous"),
+      "GM" -> PipelineSpec(61, "PA", Map("C" -> 0.01), Nil, "GM",
+        protocolHp = Map("threshold" -> 0.05)),
+      "FGM" -> PipelineSpec(61, "PA", Map("C" -> 0.01), Nil, "FGM"),
+      "SSP" -> PipelineSpec(61, "PA", Map("C" -> 0.01), Nil, "SSP",
+        protocolHp = Map("staleness" -> 1.0)),
+      "tree" -> PipelineSpec(61, "PA", Map("C" -> 0.01), Nil, "Synchronous",
+        treeMergeThreshold = 2))
+    for ((name, spec) <- cases) {
+      val full = Trainer.fit(spark, spec.copy(rounds = K), data)
+      assert(full.curve.length == K, s"$name: curve ${full.curve}")
+      assert(full.curve.distinct.size > 1, s"$name: flat curve ${full.curve}")
+      assert(close(full.testLoss, full.curve.last), s"$name: last point")
+      for (k <- 1 until K) {
+        // fit(k)'s last point comes from the final evaluation; fit(K) scores
+        // the same global inside round k+1's pass
+        val part = Trainer.fit(spark, spec.copy(rounds = k), data)
+        assert(part.curve.length == k)
+        part.curve.zip(full.curve).foreach { case (a, b) =>
+          assert(close(a, b), s"$name k=$k: curve ${part.curve} vs ${full.curve}")
+        }
+        assert(close(part.testLoss, full.curve(k - 1)),
+          s"$name k=$k: testLoss ${part.testLoss} vs curve ${full.curve(k - 1)}")
+      }
+    }
+  }
+
+  test("an empty input fails the fit, with and without an init model") {
+    val empty = spark.sparkContext.parallelize(Seq.empty[(Array[Double], Double)], 4)
+    val spec = PipelineSpec(62, "PA", Map("C" -> 0.01), Nil, "Synchronous", rounds = 2)
+    intercept[UnsupportedOperationException](Trainer.fit(spark, spec, empty))
+    val init = Learners.create("PA", Map("C" -> 0.01)).init(3)
+    intercept[UnsupportedOperationException](
+      Trainer.fit(spark, spec, empty, init = Some(init)))
   }
 
   test("distributed PA training reaches high held-out accuracy") {
@@ -150,9 +235,11 @@ class PipelineSparkSuite extends AnyFunSuite {
     val collectFit = Trainer.fit(spark,
       PipelineSpec(41, "PA", Map("C" -> 0.01), Nil, "Synchronous",
         rounds = 2, treeMergeThreshold = 1000), data)
-    val treeFit = Trainer.fit(spark,
+    val (treeFit, treeJobs) = jobsOf(Trainer.fit(spark,
       PipelineSpec(41, "PA", Map("C" -> 0.01), Nil, "Synchronous",
-        rounds = 2, treeMergeThreshold = 2), data)
+        rounds = 2, treeMergeThreshold = 2), data))
+    // one merge action per round, then the final evaluation
+    assert(treeJobs == 2 + 1, s"tree path ran $treeJobs jobs")
     assert(treeFit.model.n == collectFit.model.n)
     val a = collectFit.model.params
     val b = treeFit.model.params
