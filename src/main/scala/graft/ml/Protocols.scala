@@ -272,9 +272,9 @@ final class FGM(val threshold: Double) extends Protocol {
     keep
   }
 
-  /** One-shot path for callers that already hold every replica driver-side
-    * (the streaming trainer): identical decision + fold, with the scalar
-    * phases charged as in the two-phase batch path. */
+  /** One-shot path for callers that already hold every replica
+    * driver-side: identical decision + fold, with the scalar phases charged
+    * as in the round engine's two-phase path. */
   override def aggregate(replicas: Seq[ModelState], prev: Option[ModelState],
       learner: OnlineLearner, stats: ProtocolStats,
       totalReplicas: Long = -1L): ModelState = prev match {

@@ -2,6 +2,7 @@ package graft.pipeline
 
 import graft.core._
 import graft.ml._
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, udf}
@@ -82,6 +83,11 @@ final class FittedPipeline(
   * the protocol folds replicas into the next global. The reference's
   * continuous Kafka feedback loop becomes the per-round broadcast.
   *
+  * The ship/merge half of a round is [[Rounds]], the round engine shared
+  * with [[graft.streaming.StreamingTrainer.fitStream]]. The Trainer owns the
+  * replica pass: the split ring, the SSP/Asynchronous stale-read window and
+  * its `seedRound` stamp, and the held-out scoring fused into that pass.
+  *
   * Train/test split reproduces FlinkSpoke.scala:92-107: of every 10 points
   * 2 go to a <=`testCap`-slot ring buffer per partition; ring evictions are
   * fed back to training.
@@ -117,43 +123,20 @@ object Trainer {
     val learner = Learners.create(spec.learner, spec.learnerHp)
     val chain = Preprocess.fitChain(spec.preprocessors, data)
     val bcChain = sc.broadcast(chain)
-    var tdata = data.map { case (x, y) => (Preprocess.applyChain(bcChain.value, x), y) }
     val protocol = Protocols.resolve(spec.protocol, spec.learner,
       data.getNumPartitions, spec.protocolHp)
-    protocol.maxParallelism.foreach { p =>
-      if (tdata.getNumPartitions > p) tdata = tdata.coalesce(p)
-    }
-    // the documented MiniBatchKMeans contract, enforced (r11 review): with
-    // no shared seed, round-1 replicas farthest-first-seed independently and
-    // the count-weighted merge averages MISALIGNED cluster ids — silently
-    // wrong centroids. Fail loudly instead; MiniBatchKMeans.sharedSeed
-    // builds the seed.
-    require(!(learner.isInstanceOf[MiniBatchKMeans] &&
-        tdata.getNumPartitions > 1 && init.isEmpty),
-      "MiniBatchKMeans under parallel training requires a shared seed model " +
-        "(Trainer.fit init param) — see MiniBatchKMeans.sharedSeed")
+    val tdata = Rounds.partitioned(
+      data.map { case (x, y) => (Preprocess.applyChain(bcChain.value, x), y) },
+      protocol, learner, seeded = init.isDefined)
     tdata.persist(StorageLevel.MEMORY_AND_DISK)
     try {
       val testCap = spec.testCap
       val stats = ProtocolStats()
+      val rounds = new Rounds(learner, spec, stats)
       var global: Option[ModelState] = init
       var anyMerged = false
       var mergedLast = false // the previous round produced a new global
-      var totalFitted = 0L
-      var totalCumLoss = 0.0
       val curve = mutable.ArrayBuffer[Double]()
-
-      // Log-depth tree merge applies when the protocol is a plain weighted
-      // average (Synchronous family), the learner's pairwise merge is
-      // associative, and there are enough partitions that a driver collect
-      // of W models would be the bottleneck (SCALE.md). SSP qualifies: its
-      // merge is the same average, and in-fit no replica can exceed the
-      // staleness bound (seeding clamps lag to s), so the admit-all tree
-      // fold coincides with SSP.aggregate.
-      val useTreeMerge =
-        Set("Synchronous", "Asynchronous", "SSP").contains(protocol.name) &&
-          learner.mergeIsAssociative &&
-          tdata.getNumPartitions > spec.treeMergeThreshold
 
       // SSP's bounded-stale reads: keep a window of recent globals,
       // recent(k) = global after round (r-1-k), newest first. Partition pid
@@ -171,10 +154,6 @@ object Trainer {
         // granularity. (Previously a documented collapse onto Synchronous;
         // the AsyncEqualsUnboundedSSP suite gate pins the new semantics.)
         case Asynchronous => Some(Int.MaxValue)
-        case _ => None
-      }
-      val fgmProto: Option[FGM] = protocol match {
-        case f: FGM => Some(f)
         case _ => None
       }
       val numParts = tdata.getNumPartitions
@@ -219,104 +198,10 @@ object Trainer {
             Iterator.single((m, held))
           }
         }
-        // per-partition held-out sums of round r-1's global, partition order
-        var held: Seq[Held] = Nil
-        val mergedOpt: Option[ModelState] = if (fgmProto.isDefined &&
-            global.isDefined) {
-          // FGM two-level rounds (see Protocols.FGM): frozen rounds move
-          // only one 8-byte scalar per worker off the executors; parameter
-          // vectors travel ONLY on a confirmed global violation — and then
-          // every replica ships (all-or-nothing, never GM's partial fold).
-          // Round 1 (no global yet) bootstraps through the chunked path
-          // below, where FGM.ships is always true.
-          val fgm = fgmProto.get
-          val repl = replRdd.persist(StorageLevel.MEMORY_AND_DISK)
-          try {
-            // counter phase: one drift norm per worker, partition order
-            val drifts = repl
-              .map { case (m, h) => (Protocols.driftNorm(m.params,
-                bcSeeds.value.head.get.params), h) }
-              .collect()
-            held = drifts.map(_._2).toSeq
-            if (drifts.isEmpty) None
-            else if (!fgm.decide(drifts.map(_._1).toSeq, stats))
-              Some(fgm.frozen(global.get))
-            else {
-              val maxP = spec.maxMsgParams
-              val blocks = repl.mapPartitions { it =>
-                val pid = org.apache.spark.TaskContext.getPartitionId()
-                it.flatMap { case (m, _) => ModelWire.chunk(m, maxP, pid).iterator }
-              }.collect().toSeq
-              val shipped = ModelWire.reassemble(blocks,
-                (bdim, ps) => learner.init(bdim).loadWire(ps))
-              stats.blocks += blocks.length
-              Some(fgm.syncFold(shipped, global, learner, stats))
-            }
-          } finally repl.unpersist(blocking = false)
-        } else if (useTreeMerge) {
-            // one action: an empty input folds to the None zero
-            def mergeOpt(a: Option[ModelState], b: Option[ModelState]) =
-              if (a.isDefined && b.isDefined) Some(learner.merge(Seq(a.get, b.get)))
-              else a.orElse(b)
-            val (mOpt, k, bytes, h) = replRdd.treeAggregate(
-              (Option.empty[ModelState], 0L, 0L, NoHeld))(
-              { case ((ma, ka, ba, ha), (m, hm)) =>
-                (mergeOpt(ma, Some(m)), ka + 1L, ba + m.params.length.toLong * 8L, ha + hm)
-              },
-              { case ((ma, ka, ba, ha), (mb, kb, bb, hb)) =>
-                (mergeOpt(ma, mb), ka + kb, ba + bb, ha + hb)
-              })
-            held = Seq(h)
-            mOpt.map { m =>
-              stats.modelsShipped += k
-              stats.bytesShipped += bytes
-              // each replica enters the merge tree once, as
-              // ceil(payload/maxMsgParams) transport blocks
-              stats.blocks +=
-                k * ((m.wireParams.length.toLong + spec.maxMsgParams - 1) /
-                  spec.maxMsgParams).max(1L)
-              m
-            }
-          } else {
-            // Chunked ship path: the map-side gate drops non-drifted
-            // replicas on their executors (the driver receives a 1-row
-            // marker instead of O(params) per skipped replica); shipped
-            // replicas are split into <=maxMsgParams-double blocks so no
-            // single collected record exceeds the message cap, then
-            // reassembled before the protocol merge. Each partition's
-            // held-out sums travel as one record ahead of its blocks.
-            val maxP = spec.maxMsgParams
-            val collected = replRdd.mapPartitions { it =>
-              val pid = org.apache.spark.TaskContext.getPartitionId()
-              it.flatMap { case (m, h) =>
-                val ship =
-                  if (protocol.ships(m, bcSeeds.value.head))
-                    ModelWire.chunk(m, maxP, pid).iterator.map(Option(_))
-                  else Iterator.single(Option.empty[ParamBlock])
-                Iterator.single[Either[Held, Option[ParamBlock]]](Left(h)) ++
-                  ship.map(Right(_))
-              }
-            }.collect()
-            held = collected.collect { case Left(h) => h }.toSeq
-            val gated = collected.collect { case Right(b) => b }
-            val blocks = gated.flatten.toSeq
-            val shipped = ModelWire.reassemble(blocks,
-              (bdim, ps) => learner.init(bdim).loadWire(ps))
-            stats.blocks += blocks.length
-            val totalReplicas =
-              gated.count(_.isEmpty).toLong + blocks.count(_.idx == 0)
-            if (collected.isEmpty) None
-            else Some(protocol.aggregate(shipped, global, learner, stats,
-              totalReplicas = totalReplicas))
-          }
-        if (scorePrev) curve += summarize(learner, held.foldLeft(NoHeld)(_ + _))._1
-        mergedOpt.foreach { merged =>
-          totalFitted += merged.n
-          totalCumLoss += merged.cumLoss
-          merged.n = totalFitted
-          merged.cumLoss = totalCumLoss
-          global = Some(merged)
-        }
+        // held-out sums of round r-1's global, summed in partition order
+        val (mergedOpt, held) = rounds.merge(replRdd, bcSeeds, protocol, NoHeld)(_ + _)
+        if (scorePrev) curve += summarize(learner, held)._1
+        mergedOpt.foreach(m => global = Some(m))
         mergedLast = mergedOpt.isDefined
         anyMerged ||= mergedLast
         // advance the stale-read window even on a no-merge round, so
@@ -402,6 +287,166 @@ object Trainer {
       Iterator.single(scoreRing(learner, bcModel.value, holdOut(it, testCap)(_ => ())))
     }.reduce(_ + _)
     summarize(learner, total)
+  }
+}
+
+/** The round engine: the ship/merge half of one protocol round, shared by
+  * [[Trainer.fit]] (per round) and
+  * [[graft.streaming.StreamingTrainer.fitStream]] (per micro-batch) — the
+  * reference's single parameter server (FlinkHub), which folds every
+  * spoke's model the same way in both settings. Each trainer builds the
+  * replica RDD `(model, h)`, where `h` is a per-partition side value with a
+  * zero and a `+` (the Trainer's held-out sums; `Unit` for the stream), and
+  * broadcasts its seed window, whose head is the current global. One
+  * instance per fit keeps the running fitted-count/cumulative-loss totals
+  * that every new global carries.
+  *
+  * The engine's Spark actions must stay in this file: graftbench attributes
+  * the `train_batch` jobs to its `pipeline.*` layers by call-site file.
+  */
+private[graft] final class Rounds(learner: OnlineLearner, spec: PipelineSpec,
+    stats: ProtocolStats) {
+  private var totalFitted = 0L
+  private var totalCumLoss = 0.0
+
+  /** Ship and merge one round of replicas: (the new global, if the round
+    * had any replica; the partitions' side values summed in partition
+    * order from `zero`).
+    */
+  def merge[H](replicas: RDD[(ModelState, H)],
+      seeds: Broadcast[IndexedSeq[Option[ModelState]]], protocol: Protocol,
+      zero: H)(plus: (H, H) => H): (Option[ModelState], H) = {
+    val global = seeds.value.head
+    // the task closures below capture these locals, not the engine
+    val maxP = spec.maxMsgParams
+    val l = learner
+    def reassemble(blocks: Seq[ParamBlock]): Seq[ModelState] = {
+      stats.blocks += blocks.length
+      ModelWire.reassemble(blocks, (bdim, ps) => l.init(bdim).loadWire(ps))
+    }
+    // Log-depth tree merge applies when the protocol is a plain weighted
+    // average (Synchronous family), the learner's pairwise merge is
+    // associative, and there are enough partitions that a driver collect
+    // of W models would be the bottleneck (SCALE.md). SSP qualifies: its
+    // merge is the same average, and in-fit no replica can exceed the
+    // staleness bound (seeding clamps lag to s), so the admit-all tree
+    // fold coincides with SSP.aggregate.
+    val useTreeMerge =
+      Set("Synchronous", "Asynchronous", "SSP").contains(protocol.name) &&
+        learner.mergeIsAssociative &&
+        replicas.getNumPartitions > spec.treeMergeThreshold
+    val (mergedOpt, held) = protocol match {
+      case fgm: FGM if global.isDefined =>
+        // FGM two-level rounds (see Protocols.FGM): frozen rounds move
+        // only one 8-byte scalar per worker off the executors; parameter
+        // vectors travel ONLY on a confirmed global violation — and then
+        // every replica ships (all-or-nothing, never GM's partial fold).
+        // Round 1 (no global yet) bootstraps through the chunked path
+        // below, where FGM.ships is always true.
+        val repl = replicas.persist(StorageLevel.MEMORY_AND_DISK)
+        try {
+          // counter phase: one drift norm per worker, partition order
+          val drifts = repl
+            .map { case (m, h) => (Protocols.driftNorm(m.params,
+              seeds.value.head.get.params), h) }
+            .collect()
+          val merged =
+            if (drifts.isEmpty) None
+            else if (!fgm.decide(drifts.map(_._1).toSeq, stats))
+              Some(fgm.frozen(global.get))
+            else {
+              val blocks = repl.mapPartitions { it =>
+                val pid = org.apache.spark.TaskContext.getPartitionId()
+                it.flatMap { case (m, _) => ModelWire.chunk(m, maxP, pid).iterator }
+              }.collect().toSeq
+              Some(fgm.syncFold(reassemble(blocks), global, l, stats))
+            }
+          (merged, drifts.toSeq.map(_._2))
+        } finally repl.unpersist(blocking = false)
+      case _ if useTreeMerge =>
+        // one action: an empty input folds to the None zero
+        def mergeOpt(a: Option[ModelState], b: Option[ModelState]) =
+          if (a.isDefined && b.isDefined) Some(l.merge(Seq(a.get, b.get)))
+          else a.orElse(b)
+        val (mOpt, k, bytes, h) = replicas.treeAggregate(
+          (Option.empty[ModelState], 0L, 0L, zero))(
+          { case ((ma, ka, ba, ha), (m, hm)) =>
+            (mergeOpt(ma, Some(m)), ka + 1L, ba + m.params.length.toLong * 8L, plus(ha, hm))
+          },
+          { case ((ma, ka, ba, ha), (mb, kb, bb, hb)) =>
+            (mergeOpt(ma, mb), ka + kb, ba + bb, plus(ha, hb))
+          })
+        val merged = mOpt.map { m =>
+          stats.modelsShipped += k
+          stats.bytesShipped += bytes
+          // each replica enters the merge tree once, as
+          // ceil(payload/maxMsgParams) transport blocks
+          stats.blocks +=
+            k * ((m.wireParams.length.toLong + maxP - 1) / maxP).max(1L)
+          m
+        }
+        (merged, Seq(h))
+      case _ =>
+        // Chunked ship path: the map-side gate drops non-drifted
+        // replicas on their executors (the driver receives a 1-row
+        // marker instead of O(params) per skipped replica); shipped
+        // replicas are split into <=maxMsgParams-double blocks so no
+        // single collected record exceeds the message cap, then
+        // reassembled before the protocol merge. Each partition's
+        // side value travels as one record ahead of its blocks.
+        val collected = replicas.mapPartitions { it =>
+          val pid = org.apache.spark.TaskContext.getPartitionId()
+          it.flatMap { case (m, h) =>
+            val ship =
+              if (protocol.ships(m, seeds.value.head))
+                ModelWire.chunk(m, maxP, pid).iterator.map(Option(_))
+              else Iterator.single(Option.empty[ParamBlock])
+            Iterator.single[Either[H, Option[ParamBlock]]](Left(h)) ++
+              ship.map(Right(_))
+          }
+        }.collect()
+        val gated = collected.collect { case Right(b) => b }
+        val blocks = gated.flatten.toSeq
+        val shipped = reassemble(blocks)
+        val totalReplicas =
+          gated.count(_.isEmpty).toLong + blocks.count(_.idx == 0)
+        val merged =
+          if (collected.isEmpty) None
+          else Some(protocol.aggregate(shipped, global, l, stats,
+            totalReplicas = totalReplicas))
+        (merged, collected.toSeq.collect { case Left(h) => h })
+    }
+    mergedOpt.foreach { merged =>
+      totalFitted += merged.n
+      totalCumLoss += merged.cumLoss
+      merged.n = totalFitted
+      merged.cumLoss = totalCumLoss
+    }
+    (mergedOpt, held.foldLeft(zero)(plus))
+  }
+}
+
+private[graft] object Rounds {
+
+  /** The replica input for one round under `protocol`: coalesced to the
+    * protocol's `maxParallelism`. `seeded` says the round starts from a
+    * global model. MiniBatchKMeans needs one under parallel training: with
+    * none, round-1 replicas farthest-first-seed independently and the
+    * count-weighted merge averages MISALIGNED cluster ids — silently wrong
+    * centroids — so that case fails loudly instead.
+    */
+  def partitioned[T](data: RDD[T], protocol: Protocol, learner: OnlineLearner,
+      seeded: Boolean): RDD[T] = {
+    val out = protocol.maxParallelism match {
+      case Some(p) if data.getNumPartitions > p => data.coalesce(p)
+      case _ => data
+    }
+    require(!(learner.isInstanceOf[MiniBatchKMeans] &&
+        out.getNumPartitions > 1 && !seeded),
+      "MiniBatchKMeans under parallel training requires a shared seed model " +
+        "(the init param of Trainer.fit or fitStream) — see " +
+        "MiniBatchKMeans.sharedSeed")
+    out
   }
 }
 

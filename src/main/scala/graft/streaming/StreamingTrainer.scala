@@ -1,7 +1,8 @@
 package graft.streaming
 
 import graft.ml._
-import graft.pipeline.PipelineSpec
+import graft.pipeline.{PipelineSpec, Rounds}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
@@ -14,6 +15,12 @@ import scala.collection.mutable.ArrayBuffer
   * granularity via foreachBatch, with no Kafka feedback loop (design (b) of
   * SURVEY §3.4). The prequential cumulative loss per batch is the learning
   * curve the reference's statistics pipeline tracks (FlinkHub.scala:96-156).
+  *
+  * Each micro-batch is one round of [[graft.pipeline.Rounds]], the round
+  * engine shared with [[graft.pipeline.Trainer.fit]], which ships and
+  * merges the replicas. This trainer owns the foreachBatch source, the
+  * worker routing, the per-name protocol cache and the [[BatchPoint]]
+  * curve.
   */
 object StreamingTrainer {
 
@@ -41,6 +48,9 @@ object StreamingTrainer {
     * partitions train in ascending seq order. Replayable trajectories
     * (ml31's cross-engine FGM gate) need this; the default mode's
     * round-robin repartition does not guarantee either assignment or order.
+    *
+    * The query's checkpoint lives under `dir` for the duration of the call
+    * and is removed when it returns or throws.
     */
   def fitStream(spark: SparkSession, dir: String, schema: StructType,
       spec: PipelineSpec, partitionsPerBatch: Int = 0,
@@ -58,18 +68,18 @@ object StreamingTrainer {
     // unaffected — a cached instance behaves identically.
     var protoCache: Map[String, Protocol] = Map.empty
     val stats = ProtocolStats()
-    var totalFitted = 0L
-    var totalCumLoss = 0.0
+    val rounds = new Rounds(learner, spec, stats)
     val curve = ArrayBuffer[BatchPoint]()
 
     val src = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(dir)
     // unique checkpoint per fit: the staged dir may be memoized across runs,
     // and resuming a committed checkpoint would replay zero batches
-    val ckpt = java.util.UUID.randomUUID().toString.replace("-", "")
+    val ckpt = new Path(dir,
+      "_ckpt_train_" + java.util.UUID.randomUUID().toString.replace("-", ""))
     val q = src.writeStream
       .outputMode("append")
-      .option("checkpointLocation", s"$dir/_ckpt_train_$ckpt")
+      .option("checkpointLocation", ckpt.toString)
       .foreachBatch { (df: DataFrame, batchId: Long) =>
         val rdd =
           if (routed) {
@@ -98,28 +108,14 @@ object StreamingTrainer {
           p
         })
         protocolName = protocol.name
-        val data = protocol.maxParallelism match {
-          case Some(p) if rdd.getNumPartitions > p => rdd.coalesce(p)
-          case _ => rdd
-        }
-        // the batch Trainer's MiniBatchKMeans shared-seed contract, mirrored
-        // here (r11 advisor, medium): with no shared global, multi-partition
-        // round-1 replicas each farthest-first self-seed and the
-        // count-weighted merge averages MISALIGNED cluster ids — silently
-        // wrong centroids. Fail loudly; pass `init =
-        // MiniBatchKMeans.sharedSeed(...)` to fitStream instead.
-        require(!(learner.isInstanceOf[MiniBatchKMeans] &&
-            data.getNumPartitions > 1 && global.isEmpty),
-          "MiniBatchKMeans under parallel streaming training requires a " +
-            "shared seed model (fitStream init param) — see " +
-            "MiniBatchKMeans.sharedSeed")
-        val bcGlobal = spark.sparkContext.broadcast(global)
-        val maxP = spec.maxMsgParams
-        // Per-partition replica training (seeded from the broadcast global,
-        // per-round counters zeroed) — the replica RDD is the batch
-        // Trainer's per-round shape, reused by both ship paths below.
+        val data = Rounds.partitioned(rdd, protocol, learner,
+          seeded = global.isDefined)
+        // a one-element seed window: the freshest global
+        val bcSeeds = spark.sparkContext.broadcast(IndexedSeq(global))
+        // Per-partition replica training, seeded from the global with
+        // per-round counters zeroed.
         val replRdd = data.mapPartitions { it =>
-          var model: ModelState = bcGlobal.value.map(_.deepCopy).orNull
+          var model: ModelState = bcSeeds.value.head.map(_.deepCopy).orNull
           if (model != null) { model.n = 0L; model.cumLoss = 0.0 }
           var any = false
           it.foreach { case (x, y) =>
@@ -127,83 +123,26 @@ object StreamingTrainer {
             any = true
             learner.fit(model, x, y)
           }
-          if (any) { learner.finish(model); Iterator.single(model) }
+          if (any) { learner.finish(model); Iterator.single((model, ())) }
           else Iterator.empty
         }
-        val fgmWithGlobal: Option[FGM] = protocol match {
-          case f: FGM if global.isDefined => Some(f)
-          case _ => None
-        }
-        val mergedOpt: Option[ModelState] = fgmWithGlobal match {
-          case Some(fgm) =>
-            // FGM two-level micro-batches, mirroring the batch Trainer
-            // (Pipeline.scala): the scalar counter phase collects ONE drift
-            // norm per worker; parameter vectors leave the executors ONLY
-            // on a confirmed global violation. A frozen batch therefore
-            // moves k*8 bytes AND zero blocks — the bytes ledger st43
-            // gates and the blocks ledger now agree (r9 advisor fix).
-            val repl = replRdd.persist(
-              org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            try {
-              val drifts = repl
-                .map(m => Protocols.driftNorm(m.params,
-                  bcGlobal.value.get.params))
-                .collect()
-              if (drifts.isEmpty) None
-              else if (!fgm.decide(drifts.toSeq, stats))
-                Some(fgm.frozen(global.get))
-              else {
-                val blocks = repl.mapPartitions { it =>
-                  val pid = org.apache.spark.TaskContext.getPartitionId()
-                  it.flatMap(m => ModelWire.chunk(m, maxP, pid).iterator)
-                }.collect().toSeq
-                val shipped = ModelWire.reassemble(blocks,
-                  (bdim, ps) => learner.init(bdim).loadWire(ps))
-                stats.blocks += blocks.length
-                Some(fgm.syncFold(shipped, global, learner, stats))
-              }
-            } finally repl.unpersist(blocking = false)
-          case None =>
-            // Same map-side ship gate + chunked ship path as the batch
-            // Trainer: drift-gated protocols keep non-drifted replicas on
-            // their executors, and shipped payloads travel as
-            // <=maxMsgParams-double ParamBlocks (block.dim carries the
-            // data-discovered input dim).
-            val collected = replRdd.mapPartitions { it =>
-              val pid = org.apache.spark.TaskContext.getPartitionId()
-              it.flatMap { model =>
-                if (protocol.ships(model, bcGlobal.value))
-                  ModelWire.chunk(model, maxP, pid).iterator.map(Option(_))
-                else Iterator.single(Option.empty[ParamBlock])
-              }
-            }.collect()
-            val blocks = collected.flatten.toSeq
-            val replicas = ModelWire.reassemble(blocks,
-              (bdim, ps) => learner.init(bdim).loadWire(ps))
-            stats.blocks += blocks.length
-            if (collected.isEmpty) None
-            else Some(protocol.aggregate(replicas, global, learner, stats,
-              totalReplicas =
-                collected.count(_.isEmpty).toLong + blocks.count(_.idx == 0)))
-        }
-        mergedOpt.foreach { merged =>
-          totalFitted += merged.n
-          totalCumLoss += merged.cumLoss
-          merged.n = totalFitted
-          merged.cumLoss = totalCumLoss
-          global = Some(merged)
-          val theta = protocol match {
-            case f: FGM => f.theta
-            case _ => Double.NaN
+        rounds.merge(replRdd, bcSeeds, protocol, ())((_, _) => ())._1
+          .foreach { merged =>
+            global = Some(merged)
+            val theta = protocol match {
+              case f: FGM => f.theta
+              case _ => Double.NaN
+            }
+            curve += BatchPoint(batchId, merged.n, merged.cumLoss,
+              stats.modelsShipped, stats.bytesShipped, theta)
           }
-          curve += BatchPoint(batchId, totalFitted, totalCumLoss,
-            stats.modelsShipped, stats.bytesShipped, theta)
-        }
-        ()
       }
       .start()
-    q.processAllAvailable()
-    q.stop()
+    try q.processAllAvailable()
+    finally {
+      q.stop()
+      ckpt.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(ckpt, true)
+    }
     StreamFit(global.getOrElse(learner.init(1)), learner, protocolName,
       stats, curve.toSeq)
   }
